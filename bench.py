@@ -790,6 +790,17 @@ def run_submitbench(sf_dir: str, cpus: int) -> dict:
         "twinspect_spark", "__main__.py",
     )
 
+    # driver heap: 3 GB per core within [8, 64] GB, never above 3/4 of
+    # the host's RAM (the JVM also needs off-heap and the Python workers
+    # share the box); SPARK_GRAFT_SUBMIT_MEM overrides
+    with open("/proc/meminfo") as f:
+        mem_gb = next(
+            int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:")
+        ) / 2**20
+    driver_mem = os.environ.get("SPARK_GRAFT_SUBMIT_MEM") or (
+        f"{max(1, min(max(8, 3 * cpus), 64, int(0.75 * mem_gb)))}g"
+    )
+
     def submit() -> dict:
         t0 = time.perf_counter()
         p = subprocess.run(
@@ -801,9 +812,7 @@ def run_submitbench(sf_dir: str, cpus: int) -> dict:
                 # executor-faithful sizing session.py documents must be
                 # given to the launcher — without it the submitted job
                 # runs on the 1g default and OOMs at replica scale
-                "--driver-memory",
-                os.environ.get("SPARK_GRAFT_SUBMIT_MEM")
-                or f"{min(max(8, 3 * cpus), 64)}g",
+                "--driver-memory", driver_mem,
                 "--py-files", zip_path,
                 entry,
                 "--input", corpus,
@@ -923,7 +932,7 @@ def run_verifybench() -> dict:
         ingested = ingest_files(files, cfg).localCheckpoint()
         reps, _ = collapse_exact_dups(ingested)
         sigs = compute_signatures(reps, cfg).localCheckpoint()
-        cands = unified_candidates(sigs, cfg, materialize=True)
+        cands = unified_candidates(sigs, cfg)
         from twinspect_spark.operators.verify import (
             estimate_filter_candidates,
         )
@@ -1621,7 +1630,7 @@ def main() -> None:
                         / 1e9, 2,
                     ),
                 }
-                v = (res.stage_seconds or {}).get(s)
+                v = res.stage_seconds.get(s)
                 if v is not None and v <= stage_min.get(s, 1e18):
                     stage_min[s] = v
                     stage_metrics_at_min[s] = sm

@@ -122,3 +122,16 @@ def test_signatures_checkpoint_is_bucketed(spark, corpus, tmp_path_factory):
     # byte-identical content vs a plain parquet read of the same files
     plain = spark.read.parquet(man.stage_path("signatures"))
     assert sigs.count() == plain.count()
+
+
+def test_relative_root_resumes(spark, corpus, tmp_path, monkeypatch):
+    """A relative checkpoint root (the spark-submit ``--checkpoint ckpt``
+    case) must resume: the bucketed signatures stage has to land under
+    that root, not under the warehouse dir."""
+    monkeypatch.chdir(tmp_path)
+    files = spark.createDataFrame(corpus.files)
+    res1, _, man = run_dedup_resumable(spark, files, CFG, "ckpt")
+    assert man.stage_path("signatures").startswith(str(tmp_path))
+    res2, status, _ = run_dedup_resumable(spark, files, CFG, "ckpt")
+    assert all(v == "cached" for v in status.values())
+    assert _clusters_map(res2) == _clusters_map(res1)

@@ -137,6 +137,7 @@ def main(argv: list[str] | None = None) -> int:
         "wall_sec": round(time.perf_counter() - t0, 2),
         "config": cfg.fingerprint(),
         "stages": status,
+        "stage_seconds": res.stage_seconds,
         "n_gated_out": n_gated_out,
     }
     print(json.dumps(summary))

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from twinspect_spark.config import DedupConfig
 from twinspect_spark.operators.verify import (
+    EST_MARGIN,
     packed_prefix_cols,
     packed_prefix_frac,
 )
@@ -87,22 +88,18 @@ def bucket_table(
     return b.select(*names, "e.space", "e.bucket_idx", "e.bucket_key")
 
 
-def capped_bucket_table(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    materialize: bool = True,
-    prefix_gate: bool = True,
-) -> DataFrame:
-    """Substage 1 of unified_candidates: bucket rows with per-bucket
-    counts from ONE count-window pass on the self-join's own exchange,
-    singleton and hot (> max_band_bucket) buckets dropped, result
-    optionally materialized (localCheckpoint) so both join sides and the
-    chain window read a materialized relation. Exposed separately so the
-    scaling-evidence bench (bench.py --candbench) can meter this
+def capped_bucket_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Substage 1 of unified_candidates: bucket rows (with packed prefix
+    words) and per-bucket counts from ONE count-window pass on the
+    self-join's own exchange, singleton and hot (> max_band_bucket)
+    buckets dropped, result materialized (localCheckpoint, eager) so
+    both join sides and the chain window read a materialized relation —
+    accurate AQE stats, no subtree re-execution. Exposed separately so
+    the scaling-evidence bench (bench.py --candbench) can meter this
     exchange apart from the pair join."""
     from pyspark.sql import Window as W
 
-    b = bucket_table(signatures, cfg, with_prefix=prefix_gate)
+    b = bucket_table(signatures, cfg, with_prefix=True)
     # pack (space, bucket_idx, bucket_key) into ONE long before the
     # exchange: bits 63..62 space, 61..56 bucket_idx, 55..0 the low 56
     # bits of the key. This is the byte-heaviest shuffle in the
@@ -123,24 +120,16 @@ def capped_bucket_table(
     b = b.withColumn("bucket", packed).drop(
         "space", "bucket_idx", "bucket_key"
     )
-    kept = (
+    return (
         b.withColumn("count", F.count("*").over(W.partitionBy("bucket")))
         .where(
             (F.col("count") > 1) & (F.col("count") <= cfg.max_band_bucket)
         )
+        .localCheckpoint()
     )
-    if materialize:
-        kept = kept.localCheckpoint()
-    return kept
 
 
-def unified_candidates(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    materialize: bool = True,
-    prefix_gate: bool = True,
-    margin: float = 0.15,
-) -> DataFrame:
+def unified_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """→ (a, b, src) distinct candidate pairs from both spaces, a < b.
     src = 'lsh' | 'simhash' (min over contributing spaces).
 
@@ -156,22 +145,14 @@ def unified_candidates(
     merged. Buckets beyond ``cfg.max_band_bucket`` are still dropped
     outright (hot-bucket cap, reported via hot_band_report).
 
-    ``materialize`` checkpoints the capped bucket table so the join
-    sides and the chain window read a materialized relation (accurate
-    AQE stats, no subtree re-execution); ``prefix_gate`` applies the
-    packed in-join MinHash prefix gate at (jaccard_threshold - 2*margin)
-    — same predicate estimate_filter_candidates would apply, hoisted
-    into the join stage."""
-    kept = capped_bucket_table(signatures, cfg, materialize, prefix_gate)
-    return bucket_pairs(kept, cfg, prefix_gate, margin)
+    Every pair passes the packed in-join MinHash prefix gate at
+    (jaccard_threshold - 2*EST_MARGIN) — the predicate
+    estimate_filter_candidates would apply, hoisted into the join
+    stage."""
+    return bucket_pairs(capped_bucket_table(signatures, cfg), cfg)
 
 
-def bucket_pairs(
-    kept: DataFrame,
-    cfg: DedupConfig,
-    prefix_gate: bool = True,
-    margin: float = 0.15,
-) -> DataFrame:
+def bucket_pairs(kept: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Substage 2 of unified_candidates: self-join small buckets
     (all-pairs) + spanning-chain big buckets, in-join Hamming and packed
     prefix gates, then the SO3 pair dedupe. See unified_candidates for
@@ -179,7 +160,7 @@ def bucket_pairs(
     from pyspark.sql import Window as W
 
     keys = ["bucket"]  # packed (space, bucket_idx, bucket_key) long
-    payload = [c for c in kept.columns if c not in (*keys, "count")]
+    mp = [c for c in kept.columns if c.startswith("mp")]  # prefix words
 
     # space rides in the top 2 bits of the packed key
     is_lsh = F.shiftrightunsigned(F.col("bucket"), 62) == 0
@@ -189,22 +170,17 @@ def bucket_pairs(
     )
     gate_ok = (
         packed_prefix_frac(cfg, "mpa", "mpb")
-        >= cfg.jaccard_threshold - 2 * margin
-        if prefix_gate
-        else F.lit(True)
+        >= cfg.jaccard_threshold - 2 * EST_MARGIN
     )
     src_col = F.when(is_lsh, "lsh").otherwise("simhash")
 
     def side(df: DataFrame, tag: str) -> DataFrame:
-        cols = [F.col("file_id").alias("a" if tag == "a" else "b"),
-                F.col("simhash").alias(f"sim_{tag}")]
-        if prefix_gate:
-            cols += [
-                F.col(c).alias(f"mp{tag}{c[2:]}")
-                for c in payload
-                if c.startswith("mp")
-            ]
-        return df.select(*keys, *cols)
+        return df.select(
+            *keys,
+            F.col("file_id").alias(tag),
+            F.col("simhash").alias(f"sim_{tag}"),
+            *[F.col(c).alias(f"mp{tag}{c[2:]}") for c in mp],
+        )
 
     # SHUFFLE_HASH, not sort-merge: the bucket self-join is the
     # byte-heaviest exchange in the pipeline, and SMJ pays two full
@@ -227,22 +203,18 @@ def bucket_pairs(
     big = kept.where(F.col("count") > cfg.chain_bucket_size)
     w = W.partitionBy(*keys).orderBy("simhash", "file_id")
     ranked = big.withColumn("rk", F.row_number().over(w))
-    nxt_cols = [
+    nxt = ranked.select(
+        *keys,
+        (F.col("rk") - 1).alias("rk"),
         F.col("file_id").alias("nxt_id"),
         F.col("simhash").alias("nxt_sim"),
-    ]
-    if prefix_gate:
-        nxt_cols += [
-            F.col(c).alias(f"mpb{c[2:]}") for c in payload if c.startswith("mp")
-        ]
-    nxt = ranked.select(*keys, (F.col("rk") - 1).alias("rk"), *nxt_cols)
-    this_cols = [*keys, "rk", "file_id", "simhash"]
-    if prefix_gate:
-        this_cols += [
-            F.col(c).alias(f"mpa{c[2:]}") for c in payload if c.startswith("mp")
-        ]
+        *[F.col(c).alias(f"mpb{c[2:]}") for c in mp],
+    )
     chained = (
-        ranked.select(*this_cols)
+        ranked.select(
+            *keys, "rk", "file_id", "simhash",
+            *[F.col(c).alias(f"mpa{c[2:]}") for c in mp],
+        )
         .join(nxt.hint("shuffle_hash"), [*keys, "rk"])
         .select(
             F.least("file_id", "nxt_id").alias("a"),
@@ -250,12 +222,8 @@ def bucket_pairs(
             F.col("simhash").alias("sim_a"),
             F.col("nxt_sim").alias("sim_b"),
             "bucket",
-            *(
-                [f"mpa{c[2:]}" for c in payload if c.startswith("mp")]
-                + [f"mpb{c[2:]}" for c in payload if c.startswith("mp")]
-                if prefix_gate
-                else []
-            ),
+            *[f"mpa{c[2:]}" for c in mp],
+            *[f"mpb{c[2:]}" for c in mp],
         )
         .where(hamming_ok)
         .where(gate_ok)

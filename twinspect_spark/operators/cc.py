@@ -53,26 +53,37 @@ def _numpy_cc(src, dst):
     return ids, ids[lab]
 
 
-def _driver_union_find(
-    src, dst, spark, vertices: DataFrame | None
+def _with_singletons(
+    clusters: DataFrame, vertices: DataFrame | None
 ) -> DataFrame:
+    """Vertices no edge touched become their own singleton cluster."""
+    if vertices is None:
+        return clusters
+    singletons = (
+        vertices.select("file_id")
+        .join(clusters, "file_id", "left_anti")
+        .withColumn("cluster_id", F.col("file_id"))
+    )
+    return clusters.unionByName(singletons)
+
+
+def _driver_cc(edges: DataFrame, vertices: DataFrame | None) -> DataFrame:
     """Exact same output contract as the distributed loop, for edge sets
-    that fit the driver (see ``_numpy_cc``)."""
+    that fit the driver (see ``_numpy_cc``). Arrow toPandas, not
+    collect(): per-Row materialization costs ~30s/M rows; the Arrow path
+    moves the same edges in ~1s. Union-find symmetrizes internally, so
+    the directed list is all it needs."""
     import pandas as pd
 
-    ids, labels = _numpy_cc(src, dst)
+    epdf = edges.select("a", "b").toPandas()
+    ids, labels = _numpy_cc(epdf["a"].to_numpy(), epdf["b"].to_numpy())
     pdf = pd.DataFrame({"file_id": ids, "cluster_id": labels})
     # explicit schema: empty edge sets yield an empty frame Spark cannot
     # infer from, and pandas would type empty columns as float64
-    clusters = spark.createDataFrame(pdf, "file_id long, cluster_id long")
-    if vertices is not None:
-        singletons = (
-            vertices.select("file_id")
-            .join(clusters, "file_id", "left_anti")
-            .withColumn("cluster_id", F.col("file_id"))
-        )
-        clusters = clusters.unionByName(singletons)
-    return clusters
+    clusters = edges.sparkSession.createDataFrame(
+        pdf, "file_id long, cluster_id long"
+    )
+    return _with_singletons(clusters, vertices)
 
 
 def connected_components(
@@ -109,17 +120,20 @@ def connected_components(
     # three small driver-blocking jobs over 2× the rows, a fixed tax
     # the scaling composite's near-flat cluster stage paid at every
     # level (round-4 floors)
-    n_edges = edges.count()
-    if n_edges <= threshold:
-        # Arrow toPandas, not collect(): per-Row materialization costs
-        # ~30s/M rows; the Arrow path moves the same edges in ~1s;
-        # union-find symmetrizes internally, so the directed list is
-        # all it needs
-        pdf = edges.select("a", "b").toPandas()
-        return _driver_union_find(
-            pdf["a"].to_numpy(), pdf["b"].to_numpy(),
-            edges.sparkSession, vertices,
-        )
+    if edges.count() <= threshold:
+        return _driver_cc(edges, vertices)
+    return _hash_min_cc(edges, vertices, max_iter, on_round)
+
+
+def _hash_min_cc(
+    edges: DataFrame,
+    vertices: DataFrame | None,
+    max_iter: int = 30,
+    on_round=None,
+) -> DataFrame:
+    """The distributed hash-min label propagation loop of
+    ``connected_components``, for edge sets the caller has already sized
+    above the driver threshold."""
     from pyspark import StorageLevel
 
     spark = edges.sparkSession
@@ -202,14 +216,7 @@ def connected_components(
         sym.unpersist()
 
     clusters = labels.select("file_id", F.col("label").alias("cluster_id"))
-    if vertices is not None:
-        singletons = (
-            vertices.select("file_id")
-            .join(clusters, "file_id", "left_anti")
-            .withColumn("cluster_id", F.col("file_id"))
-        )
-        clusters = clusters.unionByName(singletons)
-    return clusters
+    return _with_singletons(clusters, vertices)
 
 
 def cluster_with_members(
@@ -237,45 +244,40 @@ def cluster_with_members(
     threshold = (
         DRIVER_CC_MAX_EDGES if max_driver_edges is None else max_driver_edges
     )
-    spark = pair_edges.sparkSession
     n_pairs = pair_edges.count()
-    if n_pairs <= threshold:
-        n_exact = exact_edges.count()
-        if n_exact <= threshold:
-            epdf = pair_edges.select("a", "b").toPandas()
-            ids, labels = _numpy_cc(
-                epdf["a"].to_numpy(), epdf["b"].to_numpy()
-            )
-            vids = vertices.select("file_id").toPandas()[
-                "file_id"
-            ].to_numpy()
-            singles = vids[~np.isin(vids, ids)]
-            xpdf = exact_edges.select("a", "b").toPandas()
-            ea, eb = xpdf["a"].to_numpy(), xpdf["b"].to_numpy()
-            # member's cluster = its rep's label; a rep untouched by any
-            # pair edge is its own component min
-            pos = np.searchsorted(ids, ea)
-            pos_c = np.clip(pos, 0, max(len(ids) - 1, 0))
-            found = (
-                (pos < len(ids)) & (ids[pos_c] == ea)
-                if len(ids)
-                else np.zeros(len(ea), dtype=bool)
-            )
-            mlab = np.where(found, labels[pos_c], ea)
-            pdf = pd.DataFrame(
-                {
-                    "file_id": np.concatenate([ids, singles, eb]),
-                    "cluster_id": np.concatenate([labels, singles, mlab]),
-                }
-            )
-            return (
-                spark.createDataFrame(
-                    pdf, "file_id long, cluster_id long"
-                ),
-                True,
-            )
-    rep_clusters = connected_components(
-        pair_edges, vertices=vertices, max_driver_edges=max_driver_edges
+    if n_pairs <= threshold and exact_edges.count() <= threshold:
+        epdf = pair_edges.select("a", "b").toPandas()
+        ids, labels = _numpy_cc(epdf["a"].to_numpy(), epdf["b"].to_numpy())
+        vids = vertices.select("file_id").toPandas()["file_id"].to_numpy()
+        singles = vids[~np.isin(vids, ids)]
+        xpdf = exact_edges.select("a", "b").toPandas()
+        ea, eb = xpdf["a"].to_numpy(), xpdf["b"].to_numpy()
+        # member's cluster = its rep's label; a rep untouched by any
+        # pair edge is its own component min
+        pos = np.searchsorted(ids, ea)
+        pos_c = np.clip(pos, 0, max(len(ids) - 1, 0))
+        found = (
+            (pos < len(ids)) & (ids[pos_c] == ea)
+            if len(ids)
+            else np.zeros(len(ea), dtype=bool)
+        )
+        # gather labels only where found: with no pair edges, labels is
+        # empty and any index into it raises
+        mlab = ea.copy()
+        mlab[found] = labels[pos_c[found]]
+        pdf = pd.DataFrame(
+            {
+                "file_id": np.concatenate([ids, singles, eb]),
+                "cluster_id": np.concatenate([labels, singles, mlab]),
+            }
+        )
+        spark = pair_edges.sparkSession
+        return spark.createDataFrame(pdf, "file_id long, cluster_id long"), True
+    # the size probe above already placed the pair graph: no recount
+    rep_clusters = (
+        _driver_cc(pair_edges, vertices)
+        if n_pairs <= threshold
+        else _hash_min_cc(pair_edges, vertices)
     )
     members = exact_edges.alias("e").join(
         rep_clusters.alias("r"), F.col("e.a") == F.col("r.file_id")

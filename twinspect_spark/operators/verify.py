@@ -33,6 +33,11 @@ from twinspect_spark.functions import lcs_native as _lcs_native
 
 
 _PREFIX_LANES = 16
+# Estimate-filter slack below jaccard_threshold: the full-lane estimate
+# keeps est >= t - EST_MARGIN, and both prefix gates (the packed in-join
+# one in operators/buckets.py and the HOF one here) keep a prefix match
+# fraction >= t - 2*EST_MARGIN.
+EST_MARGIN = 0.15
 # Prefix bits per lane in the packed in-join gate. 8 bits halves the
 # gate payload riding the byte-heaviest exchange in the pipeline (the
 # bucket self-join: 16 lanes pack into 2 longs instead of 4) at no
@@ -141,12 +146,11 @@ def _est_filter_arrow(keep_cols: list[str], threshold: float, num_perm: int):
 
 def estimate_filter_candidates(
     candidates: DataFrame, signatures: DataFrame, cfg: DedupConfig,
-    margin: float = 0.15, pre_gated: bool = False,
-    materialize: bool = False,
+    pre_gated: bool = False, materialize: bool = False,
 ) -> DataFrame:
     """→ (a, b[, src], est): join MinHash signatures onto DISTINCT
     candidate pairs, keep pairs with lane-match estimate ≥ threshold -
-    margin, carrying ``est`` forward for the verify triage.
+    EST_MARGIN, carrying ``est`` forward for the verify triage.
 
     Order matters at scale: pair-dedup happens BEFORE this join — (a,b)
     rows are 16 bytes, so deduping the raw band stream first is the
@@ -156,7 +160,7 @@ def estimate_filter_candidates(
     that ~300x.) Lanes are truncated to int16 before the join — equality
     of 16-bit lane prefixes falsely collides at 2^-16 per non-matching
     lane, inflating est by ≤ (1-J)·2^-16 ≈ 1.5e-5, invisible next to the
-    ±margin band, while a truly matching lane always matches its prefix
+    ±EST_MARGIN band, while a truly matching lane always matches its prefix
     (the cascade only ADDS candidates; exact verify re-checks them all)
     — quartering shuffle and Arrow bytes vs full lanes; the lane-match
     kernel itself is a vectorized Arrow map (see _est_filter_arrow)."""
@@ -213,7 +217,7 @@ def estimate_filter_candidates(
             / F.lit(float(p))
         )
         joined = joined.where(
-            prefix_frac >= cfg.jaccard_threshold - 2 * margin
+            prefix_frac >= cfg.jaccard_threshold - 2 * EST_MARGIN
         )
     keep_cols = [c for c in joined.columns if c not in ("mh_a", "mh_b")]
     schema = T.StructType(
@@ -221,7 +225,7 @@ def estimate_filter_candidates(
         + [T.StructField("est", T.DoubleType())]
     )
     return joined.mapInArrow(
-        _est_filter_arrow(keep_cols, cfg.jaccard_threshold - margin,
+        _est_filter_arrow(keep_cols, cfg.jaccard_threshold - EST_MARGIN,
                           cfg.num_perm),
         schema,
     )

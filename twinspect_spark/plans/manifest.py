@@ -1,5 +1,11 @@
 """Stage-checkpoint manifest: durable parquet checkpoints + resume.
 
+The durable one of the two cut backends of the single dedup stage graph
+in ``pipeline.run_dedup`` (the other is an in-memory
+``localCheckpoint``): ``load`` reads a stage whose done-marker exists,
+``save`` writes one; ``run_dedup_resumable`` only builds the manifest
+and runs the graph through it.
+
 The reference memoizes every stage as a content-addressed artifact —
 ``{algo}-{dataset}-{checksum}-{tag}.{ext}`` (twinspect/tools.py:30-52) —
 and a stage re-run is a cache hit iff the artifact exists
@@ -36,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from twinspect_spark.config import DedupConfig
+from twinspect_spark.pipeline import run_dedup
 
 STAGES = ["ingested", "signatures", "candidates", "pairs", "clusters"]
 
@@ -63,17 +70,26 @@ BUCKETED_STAGES: dict[str, tuple[str, int]] = {"signatures": ("file_id", 32)}
 
 
 class StageManifest:
+    durable = True  # cut-backend flag read by pipeline.run_dedup
+
     def __init__(
         self,
         spark: SparkSession,
         root: str,
         cfg: DedupConfig,
         input_token: str = "default",
+        run_id: str | None = None,
     ):
         self.spark = spark
         self.cfg = cfg
         self.key = f"{cfg.fingerprint()}-{input_token}"
+        if "://" not in root:
+            # a relative LOCATION in the bucketed stage's table DDL
+            # resolves against the warehouse dir, not the cwd
+            root = os.path.abspath(root)
         self.base = os.path.join(root, self.key)
+        self.run_id = run_id or uuid.uuid4().hex[:12]
+        self.status: dict[str, str] = {}  # stage -> "cached" | "computed"
         os.makedirs(self.base, exist_ok=True)
 
     def stage_path(self, stage: str) -> str:
@@ -125,6 +141,13 @@ class StageManifest:
                 return self._register_bucketed(stage, b["key"], b["n"])
         return self.spark.read.parquet(self.stage_path(stage))
 
+    def load(self, stage: str) -> DataFrame | None:
+        """The stage's checkpoint when its done-marker exists, else None."""
+        if not self.is_complete(stage):
+            return None
+        self.status[stage] = "cached"
+        return self.read(stage)
+
     def invalidate(self, stage: str) -> None:
         """Drop a stage's completion marker (its data stays until
         overwritten) — forces recompute on the next resumable run."""
@@ -133,10 +156,12 @@ class StageManifest:
         except FileNotFoundError:
             pass
 
-    def write(self, stage: str, df: DataFrame, run_id: str) -> DataFrame:
-        """Materialize a stage: parquet write → lineage/metrics append →
-        manifest commit LAST. Returns the checkpoint-backed DataFrame
-        (downstream plans read the files, not the upstream lineage)."""
+    def save(self, stage: str, df: DataFrame) -> DataFrame:
+        """Materialize a stage as this run's checkpoint: parquet write →
+        lineage/metrics append → manifest commit LAST. Returns the
+        checkpoint-backed DataFrame (downstream plans read the files,
+        not the upstream lineage)."""
+        self.status[stage] = "computed"
         t0 = time.perf_counter()
         path = self.stage_path(stage)
         bucketed = BUCKETED_STAGES.get(stage)
@@ -174,7 +199,7 @@ class StageManifest:
                 F.first(F.col("_metadata.file_size")).alias("bytes"),
             )
             .select(
-                F.lit(run_id).alias("run_id"),
+                F.lit(self.run_id).alias("run_id"),
                 F.lit(stage).alias("stage"),
                 "part_file",
                 "rows",
@@ -192,7 +217,7 @@ class StageManifest:
         self.spark.createDataFrame(
             [
                 (
-                    run_id,
+                    self.run_id,
                     stage,
                     int(stats["rows"] or 0),
                     int(stats["bytes"] or 0),
@@ -210,7 +235,7 @@ class StageManifest:
             json.dump(
                 {
                     "stage": stage,
-                    "run_id": run_id,
+                    "run_id": self.run_id,
                     "rows": int(stats["rows"] or 0),
                     "wall_s": wall_s,
                     "config": self.cfg.fingerprint(),
@@ -243,69 +268,12 @@ def run_dedup_resumable(
     input_token: str = "default",
     run_id: str | None = None,
 ):
-    """The durable twin of pipeline.run_dedup: identical stage graph, but
-    every stage boundary is a parquet checkpoint and completed stages are
-    skipped on restart (left as read-from-checkpoint, zero recompute).
+    """pipeline.run_dedup with every stage cut landing in a
+    StageManifest: completed stages are read from their checkpoint
+    (zero recompute), missing ones are computed and written.
 
     Returns (DedupResult, {stage: "cached" | "computed"}, StageManifest).
     """
-    from twinspect_spark.operators.buckets import unified_candidates
-    from twinspect_spark.operators.cc import cluster_with_members
-    from twinspect_spark.operators.exact import collapse_exact_dups
-    from twinspect_spark.operators.verify import (
-        estimate_filter_candidates,
-        verify_pairs,
-    )
-    from twinspect_spark.pipeline import DedupResult
-    from twinspect_spark.signatures import compute_signatures
-
-    run_id = run_id or uuid.uuid4().hex[:12]
-    man = StageManifest(spark, checkpoint_root, cfg, input_token)
-    status: dict[str, str] = {}
-
-    def stage(name: str, thunk):
-        if man.is_complete(name):
-            status[name] = "cached"
-            return man.read(name)
-        status[name] = "computed"
-        return man.write(name, thunk(), run_id)
-
-    ingested = stage("ingested", lambda: ingest_stage(files, cfg))
-
-    def _sigs():
-        reps, _ = collapse_exact_dups(ingested)
-        return compute_signatures(reps, cfg)
-
-    signatures = stage("signatures", _sigs)
-
-    def _cands():
-        deduped = unified_candidates(signatures, cfg)
-        return estimate_filter_candidates(deduped, signatures, cfg)
-
-    candidates = stage("candidates", _cands)
-    pairs = stage("pairs", lambda: verify_pairs(candidates, ingested, cfg))
-
-    def _clusters():
-        # rep-graph CC + member expansion — mirror of pipeline.run_dedup
-        # (the stage write persists to parquet either way, so the
-        # driver-built flag is irrelevant here)
-        reps, exact_edges = collapse_exact_dups(ingested)
-        clusters, _ = cluster_with_members(
-            pairs.where("verified").select("a", "b"),
-            vertices=reps.select("file_id"),
-            exact_edges=exact_edges,
-        )
-        return clusters
-
-    clusters = stage("clusters", _clusters)
-    return (
-        DedupResult(ingested, signatures, candidates, pairs, clusters),
-        status,
-        man,
-    )
-
-
-def ingest_stage(files: DataFrame, cfg: DedupConfig) -> DataFrame:
-    from twinspect_spark.ingest import ingest_files
-
-    return ingest_files(files, cfg)
+    man = StageManifest(spark, checkpoint_root, cfg, input_token, run_id)
+    res = run_dedup(files, cfg, manifest=man)
+    return res, man.status, man
